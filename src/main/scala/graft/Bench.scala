@@ -1,23 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // per-query repetitions; the median filters ambient load variance
     // (r1→r2 showed a uniform ~1.16× drift from single-shot timings)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // populate task-end executor metrics (peak storage/exec memory)
-      // continuously instead of only at 10 s heartbeats — the peaks are
-      // SweepStats' memory-pressure signal and a sub-second query would
-      // otherwise never see a sample
-      .config("spark.executor.metrics.pollingInterval", "250ms")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // populate task-end executor metrics (peak storage/exec memory)
+    // continuously instead of only at 10 s heartbeats — the peaks are
+    // SweepStats' memory-pressure signal and a sub-second query would
+    // otherwise never see a sample (SparkConf reads spark.* properties)
+    sys.props("spark.executor.metrics.pollingInterval") = "250ms"
+    val spark = GraftSession.create("graft-bench")
     // Resource instrumentation (r12 verdict item 1): per-query task /
     // GC / spill / block-storage counters, snapshotted between queries
     // with a forced listener-bus drain so attribution is exact. The

@@ -2,26 +2,25 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory: the engine's recommended configuration in one place,
-  * so library users get the same posture the queries were designed for.
+/** Session factory: the engine's one `SparkSession.builder` call, so every
+  * `main` (Verify, Bench, Survey, tools.Dev) and library users run with
+  * the same posture the queries were designed and verified under.
   *
-  *  - Graft extensions (SQL functions + the AbsRangeRewrite optimizer
-  *    rule) are always installed.
-  *  - AQE stays on with partition coalescing and skew-join splitting —
-  *    the runtime re-plan layer the static plans rely on at scale.
-  *  - Shuffle partitions default to 2× the executor cores available to
-  *    the master (the local heuristic; on a real cluster pass
-  *    `shufflePartitions` sized to keep post-filter partitions in the
-  *    100-200 MB range at your data scale).
+  *  - Default master `local[$SPARK_GRAFT_CPUS]` (4 when unset):
+  *    Verify's correctness dump and the Bench sweep run exactly this.
+  *  - Shuffle partitions equal the master's cores. AQE (on by default in
+  *    Spark 4, with partition coalescing and skew-join splitting) re-plans
+  *    from there at runtime.
+  *  - Graft extensions (SQL functions) are always installed.
   *  - Session timezone pinned to UTC: timestamp arithmetic must not
   *    depend on where the driver happens to run.
+  *  - No UI: every caller is a batch job or a test.
   */
 object GraftSession {
 
   def create(
       appName: String = "graft",
-      master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-      shufflePartitions: Option[Int] = None): SparkSession = {
+      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"): SparkSession = {
     val procs = Runtime.getRuntime.availableProcessors()
     val cores = master match {
       case s if s.startsWith("local[") && s.endsWith("]") =>
@@ -33,16 +32,15 @@ object GraftSession {
         }
       case _ => procs
     }
-    SparkSession.builder()
+    val spark = SparkSession.builder()
       .appName(appName)
       .master(master)
       .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        shufflePartitions.getOrElse(cores * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -45,11 +45,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("jaro_winkler"),
       new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
       (args: Seq[Expression]) => JaroWinkler(args(0), args(1))))
-    // custom optimizer rule: abs(col) <= t  →  -t <= col <= t, so the
-    // bound reaches the parquet scan as PushedFilters (SurfaceSpec)
-    e.injectOptimizerRule(_ => graft.plans.AbsRangeRewrite)
-    // levenshtein(a,b) <= k → bounded levenshtein(a,b,k) >= 0 (banded
-    // O(k·n) kernel with early exit instead of the full DP matrix)
-    e.injectOptimizerRule(_ => graft.plans.LevenshteinBoundRewrite)
   }
 }

@@ -1,6 +1,9 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** The engine's ONE local-checkpoint call site — every per-query /
@@ -41,6 +44,14 @@ object Pin {
     def pinEager: DataFrame =
       df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
 
+    /** The checkpointed RDD behind a pinned frame (its plan is the
+      * `LogicalRDD` the checkpoint leaves): its partition count, its id
+      * in the persisted-RDD registry, and the handle to unpersist it. */
+    def pinnedRdd: RDD[InternalRow] =
+      df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+        .headOption.getOrElse(throw new IllegalStateException(
+          "expected a localCheckpoint-backed frame"))
+
     /** KEYED pin for loop-invariant join inputs: force a hash layout +
       * in-partition sort, pin it, and RE-DECLARE that layout on the
       * checkpointed frame
@@ -70,19 +81,15 @@ object Pin {
     def pinKeyed(keys: String*): DataFrame = {
       val kcols = keys.map(org.apache.spark.sql.functions.col)
       val probe = df.repartition(kcols: _*) // REPARTITION_BY_COL: coalescable
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
-      val probeRdd = probe.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.head
+        .pinEager
+      val probeRdd = probe.pinnedRdd
       val n = math.max(1, probeRdd.getNumPartitions)
       val ck = probe
         .repartition(n, kcols: _*)
         .sortWithinPartitions(kcols: _*)
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
+        .pinEager
       probeRdd.unpersist(blocking = false) // keyed blocks supersede probe's
-      val ckRdd = ck.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.head
+      val ckRdd = ck.pinnedRdd
       // the declaration must match the materialized blocks EXACTLY. On an
       // EMPTY frame AQE collapses the repartition to a 0-partition result
       // no matter what count was asked for — declaring hash(keys, 1) on

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.Pin._
 
 /** The session-scoped frame memo behind [[TradeGraph]] and
   * [[BasketFrames]]: each (kind, dataset dir) builds once per
@@ -22,12 +23,6 @@ private[graft] object SessionFrames {
   /** Drop every memo entry (tests use this to force cold rebuilds). */
   def invalidateAll(): Unit = synchronized { memo.clear() }
 
-  private def rddIdOf(df: DataFrame): Int =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.headOption.getOrElse(throw new IllegalStateException(
-      "expected a localCheckpoint-backed frame"))
-
   /** `keys` non-empty pins the frame KEYED ([[graft.ops.Pin.PinSyntax
     * .pinKeyed]]): hash-layout by the join key the consumers iterate on,
     * declared on the checkpointed frame so every per-round join skips
@@ -45,10 +40,8 @@ private[graft] object SessionFrames {
         // lazy checkpoint: materializes inside the first action that
         // uses it; the persist registration (consulted above and by
         // Bench's sweep) happens immediately
-        val df =
-          if (keys.isEmpty) build.localCheckpoint(eager = false)
-          else { import graft.ops.Pin._; build.pinKeyed(keys: _*) }
-        memo.put((kind, dir), Entry(spark, rddIdOf(df), df))
+        val df = if (keys.isEmpty) build.pinLazy else build.pinKeyed(keys: _*)
+        memo.put((kind, dir), Entry(spark, df.pinnedRdd.id, df))
         df
     }
   }

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 
 /** The session factory must install the extensions and the scale posture
-  * (AQE + coalescing + skew handling, UTC, sized shuffle partitions). */
+  * (AQE + skew handling by Spark's defaults, UTC, shuffle partitions equal
+  * to the master's cores). */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("GraftSession.create wires extensions and adaptive configs") {
@@ -16,8 +17,8 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
       assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
       assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
-      assert(s.conf.get("spark.sql.shuffle.partitions") == "4") // 2 cores × 2
-      // extensions active: SQL function + optimizer rule
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "2") // 2 cores
+      // extensions active: SQL function
       val c = s.sql("SELECT cosine_sim(array(1.0f), array(1.0f)) AS c").head().getDouble(0)
       assert(math.abs(c - 1.0) < 1e-12)
     } finally {
@@ -31,7 +32,7 @@ class GraftSessionSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val s = GraftSession.create(appName = "graft-session-spec2", master = "local[3,2]")
-    try assert(s.conf.get("spark.sql.shuffle.partitions") == "6") // 3 cores × 2
+    try assert(s.conf.get("spark.sql.shuffle.partitions") == "3") // 3 cores
     finally {
       SparkSession.setDefaultSession(prev)
       SparkSession.setActiveSession(prev)

@@ -4,10 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
+import scala.jdk.CollectionConverters._
 
 /** Remaining SURVEY §2 surface: CSV scans with declared schemas and
   * non-identifier column names (S2/K1), approx_count_distinct accuracy,
-  * SQL registration of native expressions via SparkSessionExtensions.
+  * SQL registration of native expressions via SparkSessionExtensions,
+  * and the one-session-factory / four-mains shape of `src/main`.
   */
 class SurfaceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -71,52 +73,6 @@ class SurfaceSpec extends AnyFunSuite {
       assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
       assert(r.getDouble(1) == 0.0)
       assert(math.abs(r.getDouble(2) - 0.9611111111111111) < 1e-15)
-      // LevenshteinBoundRewrite: the <= k predicate becomes the bounded
-      // 3-arg kernel in the optimized plan, with identical results
-      // (incl. the NULL row, dropped by both forms)
-      import s2.implicits._
-      // parquet-backed input: a LocalRelation would be constant-folded
-      // whole before the rewritten predicate is visible in the plan
-      val pdir = java.nio.file.Files.createTempDirectory("lev").toString
-      Seq(("kitten", "sitten"), ("kitten", "kitten"),
-        ("abc", "xyzzy"), (null, "x")).toDF("a", "b")
-        .write.mode("overwrite").parquet(pdir)
-      val pairs = s2.read.parquet(pdir)
-      val filtered = pairs.filter(expr("levenshtein(a, b) <= 1"))
-      val opt = filtered.queryExecution.optimizedPlan.toString
-      assert(opt.contains("levenshtein(a#") && opt.contains("Some(1)) >= 0"), opt)
-      assert(filtered.as[(String, String)].collect().toSet ==
-        Set(("kitten", "sitten"), ("kitten", "kitten")))
-      // strict < and literal-first forms rewrite too
-      val lt = pairs.filter(expr("2 > levenshtein(a, b)"))
-      assert(lt.queryExecution.optimizedPlan.toString.contains("Some(1)) >= 0"))
-    } finally {
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
-    }
-  }
-
-  test("injected optimizer rule: abs(col) <= t reaches the parquet scan as a range") {
-    val prev = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().master("local[2]")
-      .appName("graft-rule-test")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    try {
-      val li = Catalog.load(s2, "/root/testdata/sf0.001", "lineitem")
-      val q = li.filter(expr("abs(l_discount) <= 0.05")).select("l_orderkey")
-      val plan = q.queryExecution.executedPlan.toString
-      // the bound must appear as pushable attribute-vs-literal filters
-      assert(plan.contains("PushedFilters") &&
-        plan.contains("GreaterThanOrEqual(l_discount,-0.05)") &&
-        plan.contains("LessThanOrEqual(l_discount,0.05)"), plan.take(2000))
-      // and the rewrite must not change results vs the plain session
-      val expected = Catalog.load(prev, "/root/testdata/sf0.001", "lineitem")
-        .filter(expr("abs(l_discount) <= 0.05")).count()
-      assert(q.count() == expected)
     } finally {
       SparkSession.setDefaultSession(prev)
       SparkSession.setActiveSession(prev)
@@ -139,5 +95,33 @@ class SurfaceSpec extends AnyFunSuite {
     val stale = listed -- registered
     assert(missing.isEmpty && stale.isEmpty,
       s"SURVEY.md inventory drifted — missing: $missing, stale: $stale")
+  }
+
+  test("src/main has one SparkSession.builder site (GraftSession) and " +
+    "exactly the Verify, Bench, Survey and tools.Dev mains") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = {
+      val st = java.nio.file.Files.walk(root)
+      try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
+      finally st.close()
+    }
+    val text = files.map(f => f -> new String(
+      java.nio.file.Files.readAllBytes(f), "UTF-8")).toMap
+    val builders = text.collect {
+      case (f, t) if t.contains("SparkSession.builder") => root.relativize(f).toString
+    }.toSet
+    assert(builders == Set("graft/GraftSession.scala"),
+      s"SparkSession.builder outside GraftSession: $builders")
+    // qualified name of the object enclosing each `def main(`
+    val objectRe = """(?m)^\s*object\s+(\w+)""".r
+    val packageRe = """(?m)^package\s+([\w.]+)""".r
+    val mains = text.toSeq.flatMap { case (_, t) =>
+      val pkg = packageRe.findFirstMatchIn(t).map(_.group(1) + ".").getOrElse("")
+      """def main\(""".r.findAllMatchIn(t).map { m =>
+        pkg + objectRe.findAllMatchIn(t.substring(0, m.start)).toSeq.last.group(1)
+      }
+    }
+    assert(mains.sorted == Seq("graft.Bench", "graft.Survey", "graft.Verify",
+      "graft.tools.Dev"), s"mains drifted: $mains")
   }
 }
